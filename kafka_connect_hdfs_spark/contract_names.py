@@ -11,8 +11,11 @@ Mechanics:
   1. ``ingest_batch`` assigns (partition dir, chunk, offset range).
   2. repartition by (kafkaPartition, encodedPartition, chunk) — each chunk's
      rows land in ONE task ⇒ exactly one part-file per chunk dir when
-     written with ``partitionBy(..., "chunk")``.
-  3. driver renames ``.../chunk=N/part-*.ext`` → ``../<contract name>`` via
+     written with ``partitionBy(..., "chunk")``. The chunk dir is keyed by
+     (kafkaPartition, chunk), ``chunk=<p>_<n>``: chunk numbers restart per
+     Kafka partition, and under a time partitioner the partitions' chunks of
+     one encoded partition share its directory.
+  3. driver renames ``.../chunk=<p>_<n>/part-*.ext`` → ``../<contract name>`` via
      the Hadoop FileSystem API (the same atomic rename the reference's
      commitFile uses, HdfsStorage.java:151-164) and drops the chunk dirs.
 
@@ -57,6 +60,10 @@ def land_with_contract_names(
         res.data.repartition(
             F.col("partition"), F.col("encodedPartition"), F.col("chunk")
         )
+        .withColumn(
+            "chunk",
+            F.concat_ws("_", F.col("partition").cast("string"), F.col("chunk").cast("string")),
+        )
         .drop("encodedPartition")
     )
     sink.write(out, path, part_cols + ["chunk"], mode="append")
@@ -76,7 +83,7 @@ def _rename_chunks(spark, base_path, manifest_rows, part_cols, ext) -> None:
 
     for row in manifest_rows:
         dir_path = f"{base_path}/{row['encodedPartition']}"
-        chunk_dir = Path(f"{dir_path}/chunk={row['chunk']}")
+        chunk_dir = Path(f"{dir_path}/chunk={row['partition']}_{row['chunk']}")
         target = Path(f"{dir_path}/{row['file_name']}")
         if not fs.exists(chunk_dir):
             continue

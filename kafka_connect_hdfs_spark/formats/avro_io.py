@@ -17,20 +17,40 @@ enumeration gap, avro/AvroRecordWriterProvider.java:69), and ``bzip2`` —
 the spec-mandated set (avro.codec test:
 DataWriterAvroTest.testAvroCompression:405-442).
 
-Scale note: files are written per Spark partition on the executors
-(mapPartitionsWithIndex) — the driver never sees row data. On a real cluster
-with spark-avro on the classpath, ``sinks.build_sink`` uses the JVM writer
-instead; this pure-Python path is the fallback that keeps Avro parity
-runnable anywhere.
+One codec per schema (``RecordCodec``), shared by the Spark sink and by
+``write_container``/``read_container``:
+
+- encode is column-at-a-time over Arrow arrays with numpy — zigzag varints
+  for int/long/date/timestamp, the Arrow offsets and data buffer for
+  string/bytes, the little-endian value bytes for float/double, one byte for
+  boolean and a branch byte for a nullable union. Each column yields one
+  byte range per record; the ranges are scattered into one buffer of whole
+  records. Decimal and array columns use a per-row encoder for that column;
+- decode walks the record bytes once with per-column readers compiled from
+  the schema, reading ``bytes`` at integer positions, and returns Arrow
+  arrays (timestamps from their integer micros).
+
+Scale note: the sink writes files per Spark partition on the executors, and
+decodes them there, each in one ``mapInArrow`` pass — the driver never sees
+row data. On a real cluster with spark-avro on the classpath,
+``sinks.build_sink`` uses the JVM writer instead; this pure-Python path is
+the fallback that keeps Avro parity runnable anywhere.
 """
 
 from __future__ import annotations
 
+import bz2
+import datetime
+import decimal
 import io
+import itertools
 import json
 import struct
 import zlib
 from hashlib import md5
+
+import numpy as np
+import pyarrow as pa
 
 MAGIC = b"Obj\x01"
 
@@ -38,24 +58,32 @@ MAGIC = b"Obj\x01"
 # binary primitives (Avro spec §"Binary encoding")
 
 
-def _zigzag(n: int) -> int:
-    return (n << 1) ^ (n >> 63)
+def _write_varint(out: bytearray, n: int) -> None:
+    z = ((n << 1) ^ (n >> 63)) & 0xFFFFFFFFFFFFFFFF
+    while z > 0x7F:
+        out.append((z & 0x7F) | 0x80)
+        z >>= 7
+    out.append(z)
 
 
-def _unzigzag(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
+def _read_varint(b, p: int) -> tuple[int, int]:
+    x = b[p]
+    if x < 0x80:
+        return (x >> 1) ^ -(x & 1), p + 1
+    acc, shift = x & 0x7F, 7
+    while True:
+        p += 1
+        x = b[p]
+        acc |= (x & 0x7F) << shift
+        if x < 0x80:
+            return (acc >> 1) ^ -(acc & 1), p + 1
+        shift += 7
 
 
 def write_long(buf: io.BytesIO, n: int) -> None:
-    z = _zigzag(n) & 0xFFFFFFFFFFFFFFFF
-    while True:
-        b = z & 0x7F
-        z >>= 7
-        if z:
-            buf.write(bytes([b | 0x80]))
-        else:
-            buf.write(bytes([b]))
-            return
+    out = bytearray()
+    _write_varint(out, n)
+    buf.write(out)
 
 
 def read_long(buf: io.BytesIO) -> int:
@@ -67,7 +95,7 @@ def read_long(buf: io.BytesIO) -> int:
         if not b & 0x80:
             break
         shift += 7
-    return _unzigzag(acc)
+    return (acc >> 1) ^ -(acc & 1)
 
 
 def write_bytes(buf: io.BytesIO, b: bytes) -> None:
@@ -289,121 +317,523 @@ def avro_to_struct(avro_schema: dict):
 
 
 # ---------------------------------------------------------------------------
-# datum encode/decode
+# compiled codec: shared type helpers
+
+_VARINT_KINDS = frozenset(
+    ("long", "int", "date", "timestamp-micros", "local-timestamp-micros")
+)
+_EPOCH = datetime.datetime(1970, 1, 1)
+_EPOCH_ORDINAL = 719163  # date(1970, 1, 1).toordinal()
+_PACK_D, _PACK_F = struct.Struct("<d").pack, struct.Struct("<f").pack
+_UNPACK_D, _UNPACK_F = struct.Struct("<d").unpack_from, struct.Struct("<f").unpack_from
+
+
+def _split_union(t):
+    """(nullable, value type): a union ``[null, T]`` encodes as T behind a
+    branch byte (null is branch 0 on write, as struct_to_avro_schema lays
+    unions out)."""
+    if isinstance(t, list):
+        return True, [x for x in t if x != "null"][0]
+    return False, t
+
+
+def _kind(t) -> str:
+    """Name of a non-union type: a primitive, a supported logical type or
+    ``array``; other logical types encode as their underlying type."""
+    if isinstance(t, dict):
+        lt = t.get("logicalType")
+        if lt in ("timestamp-micros", "local-timestamp-micros", "date", "decimal"):
+            return lt
+        if t.get("type") == "array":
+            return "array"
+        return _kind(t["type"])
+    if t in ("long", "int", "double", "float", "string", "bytes", "boolean", "null"):
+        return t
+    raise TypeError(f"unsupported avro type {t!r}")
+
+
+_ARROW_TYPES = {
+    "long": pa.int64(),
+    "int": pa.int32(),
+    "timestamp-micros": pa.timestamp("us", tz="UTC"),
+    "local-timestamp-micros": pa.timestamp("us"),
+    "date": pa.date32(),
+    "double": pa.float64(),
+    "float": pa.float32(),
+    "string": pa.string(),
+    "bytes": pa.binary(),
+    "boolean": pa.bool_(),
+    "null": pa.null(),
+}
+
+
+def _arrow_type(t) -> pa.DataType:
+    """Arrow type of a decoded column — Spark's Arrow type for the column
+    ``avro_to_struct`` maps ``t`` to."""
+    t = _split_union(t)[1]
+    k = _kind(t)
+    if k == "decimal":
+        return pa.decimal128(t["precision"], t["scale"])
+    if k == "array":
+        return pa.list_(pa.field("element", _arrow_type(t["items"])))
+    return _ARROW_TYPES[k]
+
+
+def _naive(t: pa.DataType) -> pa.DataType:
+    """``t`` with every zoned timestamp made naive (same UTC micros)."""
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        return pa.timestamp(t.unit)
+    if pa.types.is_list(t):
+        return pa.list_(pa.field(t.value_field.name, _naive(t.value_type)))
+    return t
+
+
+def _pylist(arr) -> list:
+    """Python values of a column, timestamps as naive UTC datetimes (the
+    codec's convention for datetimes without a zone)."""
+    if isinstance(arr, list):
+        return arr
+    return arr.cast(_naive(arr.type)).to_pylist()
+
+
+def _micros(v) -> int:
+    if hasattr(v, "timestamp"):
+        # naive datetimes are UTC wall time by convention (decode returns
+        # the same); integer arithmetic — no float rounding
+        if v.tzinfo is not None:
+            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+        return (v - _EPOCH) // datetime.timedelta(microseconds=1)
+    return int(v)
+
+
+# ---------------------------------------------------------------------------
+# per-value encode/decode (decimal and array columns, unions other than
+# [null, T] on read, and the _encode_value/_decode_value entry points)
+
+
+def _row_encoder(t):
+    """``enc(v, out)`` appending the encoding of one value to ``out``."""
+    nullable, t = _split_union(t)
+    k = _kind(t)
+    if k in ("long", "int"):
+        def enc(v, out):
+            _write_varint(out, int(v))
+    elif k in ("timestamp-micros", "local-timestamp-micros"):
+        def enc(v, out):
+            _write_varint(out, _micros(v))
+    elif k == "date":
+        def enc(v, out):
+            _write_varint(out, v.toordinal() - _EPOCH_ORDINAL if hasattr(v, "toordinal") else int(v))
+    elif k == "decimal":
+        scale = t["scale"]
+
+        def enc(v, out):
+            unscaled = int(v.scaleb(scale).to_integral_value())
+            raw = unscaled.to_bytes(max(1, (unscaled.bit_length() + 8) // 8), "big", signed=True)
+            _write_varint(out, len(raw))
+            out += raw
+    elif k == "array":
+        item = _row_encoder(t["items"])
+
+        def enc(v, out):
+            if v:
+                _write_varint(out, len(v))
+                for x in v:
+                    item(x, out)
+            out.append(0)
+    elif k == "double":
+        def enc(v, out):
+            out += _PACK_D(float(v))
+    elif k == "float":
+        def enc(v, out):
+            out += _PACK_F(float(v))
+    elif k in ("string", "bytes"):
+        def enc(v, out):
+            raw = v.encode("utf-8") if k == "string" else bytes(v)
+            _write_varint(out, len(raw))
+            out += raw
+    elif k == "boolean":
+        def enc(v, out):
+            out.append(1 if v else 0)
+    else:  # null
+        def enc(v, out):
+            pass
+    if not nullable:
+        return enc
+
+    def enc_union(v, out):
+        if v is None:
+            out.append(0)
+        else:
+            out.append(2)
+            enc(v, out)
+
+    return enc_union
+
+
+def _row_decoder(t):
+    """``dec(b, p) -> (value, next p)`` for one value at position ``p``, as
+    the Python value Arrow converts to ``_arrow_type(t)``: integer micros
+    and days for timestamps and dates, raw bytes for strings."""
+    if isinstance(t, list):  # union: the branch index picks the type
+        branches = [None if x == "null" else _row_decoder(x) for x in t]
+
+        def dec_union(b, p):
+            i, p = _read_varint(b, p)
+            d = branches[i]
+            return (None, p) if d is None else d(b, p)
+
+        return dec_union
+    k = _kind(t)
+    if k in _VARINT_KINDS:
+        return _read_varint
+    if k == "decimal":
+        scale = t["scale"]
+
+        def dec(b, p):
+            n, p = _read_varint(b, p)
+            unscaled = int.from_bytes(b[p:p + n], "big", signed=True)
+            return decimal.Decimal(unscaled).scaleb(-scale), p + n
+    elif k == "array":
+        item = _row_decoder(t["items"])
+
+        def dec(b, p):
+            out = []
+            while True:
+                n, p = _read_varint(b, p)
+                if n == 0:
+                    return out, p
+                if n < 0:  # block with byte size prefix
+                    n = -n
+                    _, p = _read_varint(b, p)
+                for _ in range(n):
+                    v, p = item(b, p)
+                    out.append(v)
+    elif k == "double":
+        def dec(b, p):
+            return _UNPACK_D(b, p)[0], p + 8
+    elif k == "float":
+        def dec(b, p):
+            return _UNPACK_F(b, p)[0], p + 4
+    elif k in ("string", "bytes"):
+        def dec(b, p):
+            n, p = _read_varint(b, p)
+            return b[p:p + n], p + n
+    elif k == "boolean":
+        def dec(b, p):
+            return b[p] == 1, p + 1
+    else:  # null
+        def dec(b, p):
+            return None, p
+    return dec
 
 
 def _encode_value(buf: io.BytesIO, t, v) -> None:
-    if isinstance(t, list):  # union [null, T]
-        if v is None:
-            write_long(buf, 0)
-            return
-        write_long(buf, 1)
-        _encode_value(buf, [x for x in t if x != "null"][0], v)
-        return
-    if isinstance(t, dict):
-        lt = t.get("logicalType")
-        if lt in ("timestamp-micros", "local-timestamp-micros"):
-            if hasattr(v, "timestamp"):
-                import datetime as _dt
-
-                # naive datetimes are UTC wall time by convention (decode
-                # returns the same); integer arithmetic — no float rounding
-                if v.tzinfo is not None:
-                    v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                us = (v - _dt.datetime(1970, 1, 1)) // _dt.timedelta(microseconds=1)
-            else:
-                us = int(v)
-            write_long(buf, us)
-            return
-        if lt == "date":
-            write_long(buf, v.toordinal() - 719163 if hasattr(v, "toordinal") else int(v))
-            return
-        if lt == "decimal":
-            unscaled = int(v.scaleb(t["scale"]).to_integral_value())
-            nbytes = max(1, (unscaled.bit_length() + 8) // 8)
-            write_bytes(buf, unscaled.to_bytes(nbytes, "big", signed=True))
-            return
-        if t.get("type") == "array":
-            if v:
-                write_long(buf, len(v))
-                for item in v:
-                    _encode_value(buf, t["items"], item)
-            write_long(buf, 0)
-            return
-        _encode_value(buf, t["type"], v)
-        return
-    if t == "long" or t == "int":
-        write_long(buf, int(v))
-    elif t == "double":
-        buf.write(struct.pack("<d", float(v)))
-    elif t == "float":
-        buf.write(struct.pack("<f", float(v)))
-    elif t == "string":
-        write_bytes(buf, v.encode("utf-8"))
-    elif t == "bytes":
-        write_bytes(buf, bytes(v))
-    elif t == "boolean":
-        buf.write(b"\x01" if v else b"\x00")
-    elif t == "null":
-        pass
-    else:
-        raise TypeError(f"unsupported avro type {t!r}")
+    out = bytearray()
+    _row_encoder(t)(v, out)
+    buf.write(out)
 
 
 def _decode_value(buf: io.BytesIO, t):
-    import datetime
+    v, p = _row_decoder(t)(buf.getvalue(), buf.tell())
+    buf.seek(p)
+    return _pylist(pa.array([v], _arrow_type(t)))[0]
 
-    if isinstance(t, list):
-        idx = read_long(buf)
-        branch = t[idx]
-        return None if branch == "null" else _decode_value(buf, branch)
-    if isinstance(t, dict):
-        lt = t.get("logicalType")
-        if lt in ("timestamp-micros", "local-timestamp-micros"):
-            us = read_long(buf)
-            # integer arithmetic, symmetric with encode: naive UTC wall time
-            return datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=us)
-        if lt == "date":
-            return datetime.date.fromordinal(read_long(buf) + 719163)
-        if lt == "decimal":
-            import decimal as _decimal
 
-            n = int.from_bytes(read_bytes(buf), "big", signed=True)
-            return _decimal.Decimal(n).scaleb(-t["scale"])
-        if t.get("type") == "array":
-            out = []
-            while True:
-                n = read_long(buf)
-                if n == 0:
-                    break
-                if n < 0:  # block with byte size prefix
-                    n = -n
-                    read_long(buf)
-                for _ in range(n):
-                    out.append(_decode_value(buf, t["items"]))
-            return out
-        return _decode_value(buf, t["type"])
-    if t == "long":
-        return read_long(buf)
-    if t == "int":
-        return read_long(buf)
-    if t == "double":
-        return struct.unpack("<d", buf.read(8))[0]
-    if t == "float":
-        return struct.unpack("<f", buf.read(4))[0]
-    if t == "string":
-        return read_bytes(buf).decode("utf-8")
-    if t == "bytes":
-        return read_bytes(buf)
-    if t == "boolean":
-        return buf.read(1) == b"\x01"
-    if t == "null":
-        return None
-    raise TypeError(f"unsupported avro type {t!r}")
+# ---------------------------------------------------------------------------
+# column-at-a-time encode: every column becomes "parts", each one byte range
+# per record — (source bytes, start of each range, length of each range)
+
+#: zigzag varints of union branch 0 and branch 1 (one byte each)
+_BRANCH = np.array([0, 2], np.uint8)
+#: bit offsets of the ten 7-bit groups of a 64-bit varint
+_SHIFTS = np.arange(0, 70, 7, dtype=np.uint64)
+#: smallest zigzag value that needs k+2 varint bytes, k = 0..8
+_LIMITS = np.left_shift(np.uint64(1), np.arange(7, 70, 7, dtype=np.uint64))
+
+
+def _validity(arr) -> np.ndarray:
+    if arr.null_count == 0:
+        return np.ones(len(arr), bool)
+    return arr.is_valid().to_numpy(zero_copy_only=False)
+
+
+def _values(arr, dtype) -> np.ndarray:
+    """The value buffer of a fixed-width array (null slots hold anything)."""
+    return np.frombuffer(arr.buffers()[1], dtype, count=arr.offset + len(arr))[arr.offset:]
+
+
+def _varint_part(vals: np.ndarray, valid):
+    """Zigzag varints of int64 ``vals``, one row of 7-bit groups per value."""
+    z = ((vals << 1) ^ (vals >> 63)).view(np.uint64)
+    nbytes = 1 + (z[:, None] >= _LIMITS).sum(axis=1)
+    width = int(nbytes.max())
+    groups = ((z[:, None] >> _SHIFTS[:width]) & 0x7F).astype(np.uint8)
+    groups[np.arange(width) < (nbytes - 1)[:, None]] |= 0x80
+    if valid is not None:
+        nbytes = nbytes * valid
+    return groups.ravel(), np.arange(len(vals), dtype=np.int64) * width, nbytes
+
+
+def _column_encoder(t):
+    """``enc(column) -> parts`` for one column of avro type ``t``."""
+    nullable, inner = _split_union(t)
+    k = _kind(inner)
+    if k in _VARINT_KINDS:
+        def body(arr, valid):
+            vals = _values(arr, np.dtype(f"<i{arr.type.bit_width // 8}")).astype(np.int64)
+            return [_varint_part(vals, valid)]
+    elif k in ("double", "float"):
+        want, width = (pa.float64(), 8) if k == "double" else (pa.float32(), 4)
+
+        def body(arr, valid):
+            if arr.type != want:
+                arr = arr.cast(want)
+            src = _values(arr, np.dtype(f"<f{width}")).view(np.uint8)
+            start = np.arange(len(arr), dtype=np.int64) * width
+            ln = np.full(len(arr), width, np.int64)
+            return [(src, start, ln if valid is None else ln * valid)]
+    elif k in ("string", "bytes"):
+        def body(arr, valid):
+            large = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+            offs = np.frombuffer(
+                arr.buffers()[1], np.int64 if large else np.int32,
+                count=arr.offset + len(arr) + 1,
+            )[arr.offset:].astype(np.int64)
+            data = arr.buffers()[2]
+            src = np.frombuffer(data, np.uint8) if data is not None else np.empty(0, np.uint8)
+            ln = np.diff(offs)
+            if valid is not None:
+                ln = ln * valid
+            return [_varint_part(ln, valid), (src, offs[:-1], ln)]
+    elif k == "boolean":
+        def body(arr, valid):
+            src = arr.fill_null(False).to_numpy(zero_copy_only=False).astype(np.uint8)
+            ln = np.ones(len(arr), np.int64)
+            return [(src, np.arange(len(arr), dtype=np.int64), ln if valid is None else ln * valid)]
+    elif k == "null":
+        def body(arr, valid):
+            return []
+    else:  # decimal, array: this column only, value by value
+        row = _row_encoder(t)
+
+        def enc_rows(arr):
+            out, ends = bytearray(), []
+            for v in _pylist(arr):
+                row(v, out)
+                ends.append(len(out))
+            end = np.array(ends, np.int64)
+            start = np.concatenate([[0], end[:-1]]).astype(np.int64)
+            return [(np.frombuffer(bytes(out), np.uint8), start, end - start)]
+
+        return enc_rows
+
+    def enc(arr):
+        valid = _validity(arr)
+        if not nullable:
+            if not valid.all():
+                raise TypeError(f"null value for non-nullable avro type {t!r}")
+            return body(arr, None)
+        branch = (_BRANCH, valid.astype(np.int64), np.ones(len(arr), np.int64))
+        return [branch] + body(arr, valid)
+
+    return enc
+
+
+def _copy_ranges(out, dst, src, start, ln) -> None:
+    """out[dst[i]:dst[i]+ln[i]] = src[start[i]:start[i]+ln[i]] for every i."""
+    total = int(ln.sum())
+    if total == 0:
+        return
+    within = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(ln) - ln, ln)
+    out[np.repeat(dst, ln) + within] = src[np.repeat(start, ln) + within]
+
+
+# ---------------------------------------------------------------------------
+# column-at-a-time decode
+
+
+def _column_decoder(t):
+    """``new() -> (step, finish)``: ``step(b, p)`` decodes one value at
+    ``p`` into the column and returns the next position; ``finish()``
+    returns the column as an Arrow array."""
+    atype = _arrow_type(t)
+    if isinstance(t, list) and len(t) == 2 and "null" in t:
+        null_byte = 2 * t.index("null")  # the branch index as a varint
+        read = _row_decoder(t[1 - t.index("null")])
+    else:
+        null_byte, read = None, _row_decoder(t)
+
+    def new():
+        vals: list = []
+        append = vals.append
+        if null_byte is None:
+            def step(b, p):
+                v, p = read(b, p)
+                append(v)
+                return p
+        else:
+            def step(b, p):
+                if b[p] == null_byte:
+                    append(None)
+                    return p + 1
+                v, p = read(b, p + 1)
+                append(v)
+                return p
+
+        return step, lambda: pa.array(vals, atype)
+
+    return new
+
+
+# ---------------------------------------------------------------------------
+# record codec
+
+
+class RecordCodec:
+    """Encoders and decoders compiled once per writer schema.
+
+    Columns are a record's fields or, for a primitive container (the
+    NonRecordContainer unwrap, avro/AvroRecordWriterProvider.java:79-85), the
+    single column ``value``."""
+
+    def __init__(self, schema):
+        self.is_record = isinstance(schema, dict) and schema.get("type") == "record"
+        if self.is_record:
+            cols = [(f["name"], f["type"]) for f in schema["fields"]]
+        else:
+            cols = [("value", schema)]
+        self.names = [name for name, _ in cols]
+        self.types = [t for _, t in cols]
+        self._encoders = [_column_encoder(t) for t in self.types]
+        self._decoders = [_column_decoder(t) for t in self.types]
+
+    def encode(self, columns, n: int) -> tuple[np.ndarray, np.ndarray]:
+        """Encode ``n`` records given one column per name (Arrow arrays, or
+        Python lists for decimal/array columns): the record bytes and the
+        ``n + 1`` record offsets into them."""
+        if n == 0:
+            return np.empty(0, np.uint8), np.zeros(1, np.int64)
+        parts = [part for enc, col in zip(self._encoders, columns) for part in enc(col)]
+        offsets = np.zeros(n + 1, np.int64)
+        for _, _, ln in parts:
+            offsets[1:] += ln
+        np.cumsum(offsets, out=offsets)
+        out = np.empty(int(offsets[-1]), np.uint8)
+        dst = offsets[:-1].copy()
+        for src, start, ln in parts:
+            _copy_ranges(out, dst, src, start, ln)
+            dst += ln
+        return out, offsets
+
+    def decode(self, data, n: int) -> pa.RecordBatch:
+        """The ``n`` records encoded back to back in ``data``, as columns."""
+        cols = [new() for new in self._decoders]
+        steps = [step for step, _ in cols]
+        p = 0
+        for _ in range(n):
+            for step in steps:
+                p = step(data, p)
+        return pa.RecordBatch.from_arrays([finish() for _, finish in cols], names=self.names)
+
+    def columns_from_rows(self, rows: list) -> list:
+        """Columns of Python rows: dicts keyed by field name, or bare values
+        for a primitive container."""
+        if self.is_record:
+            values = [[r[name] for r in rows] for name in self.names]
+        else:
+            values = [rows]
+        cols = []
+        for vals, t in zip(values, self.types):
+            k = _kind(_split_union(t)[1])
+            if k in ("decimal", "array"):
+                cols.append(vals)  # encoded value by value, as given
+            elif k in ("timestamp-micros", "local-timestamp-micros"):
+                # zoned datetimes convert to their UTC instant, naive ones
+                # are taken as UTC wall time
+                cols.append(pa.array(vals, _ARROW_TYPES["timestamp-micros"]))
+            else:
+                cols.append(pa.array(vals, _arrow_type(t)))
+        return cols
 
 
 # ---------------------------------------------------------------------------
 # container file
+
+
+def _deflate(raw: bytes) -> bytes:
+    return zlib.compress(raw, 6)[2:-4]  # raw RFC-1951 (strip zlib wrapper)
+
+
+def _snappy_block(raw: bytes) -> bytes:
+    # block + big-endian CRC32 of the UNCOMPRESSED bytes
+    return _snappy_compress(raw) + (zlib.crc32(raw) & 0xFFFFFFFF).to_bytes(4, "big")
+
+
+_COMPRESS = {"null": bytes, "deflate": _deflate, "snappy": _snappy_block, "bzip2": bz2.compress}
+
+
+class ContainerWriter:
+    """One Avro Object Container File fed whole encoded records; cuts blocks
+    of exactly ``block_records`` records across ``append`` calls.
+
+    Sync marker is md5(path) — deterministic, so re-running an idempotent
+    task attempt produces byte-identical files (the same property the
+    reference gets from offset-encoded filenames, F5/W2).
+    """
+
+    def __init__(self, path: str, schema, codec: str = "null", block_records: int = 1000):
+        if codec not in _COMPRESS:
+            raise ValueError(f"unsupported avro codec {codec!r}")
+        self._compress = _COMPRESS[codec]
+        self._block_records = block_records
+        self._sync = md5(path.encode()).digest()
+        self._pending: list = []
+        self._pending_records = 0
+        self.records = 0
+        meta = io.BytesIO()
+        write_long(meta, 2)
+        write_bytes(meta, b"avro.schema")
+        write_bytes(meta, json.dumps(schema).encode())
+        write_bytes(meta, b"avro.codec")
+        write_bytes(meta, codec.encode())
+        write_long(meta, 0)
+        self._fh = open(path, "wb")
+        self._fh.write(MAGIC + meta.getvalue() + self._sync)
+
+    def append(self, data: np.ndarray, offsets: np.ndarray) -> None:
+        """Records ``i`` = ``data[offsets[i]:offsets[i + 1]]``."""
+        i, m = 0, len(offsets) - 1
+        while i < m:
+            k = min(self._block_records - self._pending_records, m - i)
+            self._pending.append(data[offsets[i]:offsets[i + k]])
+            self._pending_records += k
+            i += k
+            if self._pending_records == self._block_records:
+                self._flush()
+        self.records += m
+
+    def _flush(self) -> None:
+        if not self._pending_records:
+            return
+        raw = self._compress(b"".join(self._pending))
+        head = io.BytesIO()
+        write_long(head, self._pending_records)
+        write_long(head, len(raw))
+        self._fh.write(head.getvalue() + raw + self._sync)
+        self._pending, self._pending_records = [], 0
+
+    def close(self) -> None:
+        try:
+            self._flush()
+        finally:
+            self._fh.close()
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        self.close()
 
 
 def write_container(
@@ -411,132 +841,85 @@ def write_container(
 ) -> int:
     """Write an Avro Object Container File; returns the record count.
 
-    Sync marker is md5(path) — deterministic, so re-running an idempotent
-    task attempt produces byte-identical files (the same property the
-    reference gets from offset-encoded filenames, F5/W2).
-    """
-    schema_json = json.dumps(avro_schema)
-    sync = md5(out_path.encode()).digest()
-    is_record = isinstance(avro_schema, dict) and avro_schema.get("type") == "record"
-    fields = avro_schema["fields"] if is_record else None
-    n = 0
-    with open(out_path, "wb") as fh:
-        fh.write(MAGIC)
-        meta = io.BytesIO()
-        write_long(meta, 2)
-        write_bytes(meta, b"avro.schema")
-        write_bytes(meta, schema_json.encode())
-        write_bytes(meta, b"avro.codec")
-        write_bytes(meta, codec.encode())
-        write_long(meta, 0)
-        fh.write(meta.getvalue())
-        fh.write(sync)
-
-        block: list = []
-
-        def flush_block():
-            nonlocal block
-            if not block:
-                return
-            payload = io.BytesIO()
-            for row in block:
-                if is_record:
-                    for f in fields:
-                        _encode_value(payload, f["type"], row[f["name"]])
-                else:
-                    # NonRecordContainer unwrap: row IS the bare value
-                    _encode_value(payload, avro_schema, row)
-            raw = payload.getvalue()
-            if codec == "deflate":
-                raw = zlib.compress(raw, 6)[2:-4]  # raw RFC-1951 (strip zlib wrapper)
-            elif codec == "snappy":
-                # block + big-endian CRC32 of the UNCOMPRESSED bytes
-                crc = zlib.crc32(raw) & 0xFFFFFFFF
-                raw = _snappy_compress(raw) + crc.to_bytes(4, "big")
-            elif codec == "bzip2":
-                import bz2
-
-                raw = bz2.compress(raw)
-            head = io.BytesIO()
-            write_long(head, len(block))
-            write_long(head, len(raw))
-            fh.write(head.getvalue())
-            fh.write(raw)
-            fh.write(sync)
-            block = []
-
-        for row in rows:
-            block.append(row)
-            n += 1
-            if len(block) >= block_records:
-                flush_block()
-        flush_block()
-    return n
+    ``rows`` are dicts keyed by field name or, for a primitive schema, the
+    bare values. Encoded through the same ``RecordCodec`` as the sink, a
+    block's worth of rows at a time."""
+    rc = RecordCodec(avro_schema)
+    with ContainerWriter(out_path, avro_schema, codec, block_records) as w:
+        it = iter(rows)
+        while chunk := list(itertools.islice(it, block_records)):
+            w.append(*rc.encode(rc.columns_from_rows(chunk), len(chunk)))
+    return w.records
 
 
-def read_schema(path: str) -> dict:
-    """Schema from the container header only — no record decode, O(header)
-    bytes read (what AvroFileReader.getSchema does, avro/AvroFileReader.java:42-53)."""
-    with open(path, "rb") as fh:
-        assert fh.read(4) == MAGIC, f"not an avro container: {path}"
-        meta: dict[str, bytes] = {}
-        while True:
-            cnt = read_long(fh)
-            if cnt == 0:
-                break
-            if cnt < 0:
-                read_long(fh)
-                cnt = -cnt
-            for _ in range(cnt):
-                k = read_bytes(fh).decode()
-                meta[k] = read_bytes(fh)
-    return json.loads(meta["avro.schema"])
-
-
-def read_container(path: str) -> tuple[dict, list[dict]]:
-    """O5 — schema from the container header + all records decoded."""
-    with open(path, "rb") as fh:
-        data = fh.read()
-    buf = io.BytesIO(data)
-    assert buf.read(4) == MAGIC, f"not an avro container: {path}"
+def _read_meta(buf) -> dict[str, bytes]:
+    if buf.read(4) != MAGIC:
+        raise ValueError("not an avro container")
     meta: dict[str, bytes] = {}
     while True:
         cnt = read_long(buf)
         if cnt == 0:
-            break
+            return meta
         if cnt < 0:
             read_long(buf)
             cnt = -cnt
         for _ in range(cnt):
             k = read_bytes(buf).decode()
             meta[k] = read_bytes(buf)
-    schema = json.loads(meta["avro.schema"])
-    codec = meta.get("avro.codec", b"null").decode()
-    sync = buf.read(16)
-    is_record = isinstance(schema, dict) and schema.get("type") == "record"
-    fields = schema["fields"] if is_record else None
-    out: list = []
-    while buf.tell() < len(data):
-        n_rec = read_long(buf)
-        n_bytes = read_long(buf)
-        payload = buf.read(n_bytes)
-        if codec == "deflate":
-            payload = zlib.decompress(payload, wbits=-15)
-        elif codec == "snappy":
-            crc = int.from_bytes(payload[-4:], "big")
-            payload = _snappy_decompress(payload[:-4])
-            if zlib.crc32(payload) & 0xFFFFFFFF != crc:
-                raise ValueError(f"snappy block CRC mismatch in {path}")
-        elif codec == "bzip2":
-            import bz2
 
-            payload = bz2.decompress(payload)
-        pb = io.BytesIO(payload)
-        for _ in range(n_rec):
-            if is_record:
-                out.append({f["name"]: _decode_value(pb, f["type"]) for f in fields})
-            else:
-                # primitive container: surface under the "value" column
-                out.append({"value": _decode_value(pb, schema)})
-        assert buf.read(16) == sync, f"sync marker mismatch in {path}"
-    return schema, out
+
+def read_schema(path: str) -> dict:
+    """Schema from the container header only — no record decode, O(header)
+    bytes read (what AvroFileReader.getSchema does, avro/AvroFileReader.java:42-53)."""
+    with open(path, "rb") as fh:
+        try:
+            return json.loads(_read_meta(fh)["avro.schema"])
+        except ValueError as e:
+            raise ValueError(f"{e} in {path}") from None
+
+
+def _snappy_unblock(payload: bytes) -> bytes:
+    raw = _snappy_decompress(payload[:-4])
+    if zlib.crc32(raw) & 0xFFFFFFFF != int.from_bytes(payload[-4:], "big"):
+        raise ValueError("snappy block CRC mismatch")
+    return raw
+
+
+_DECOMPRESS = {
+    "null": bytes,
+    "deflate": lambda raw: zlib.decompress(raw, wbits=-15),
+    "snappy": _snappy_unblock,
+    "bzip2": bz2.decompress,
+}
+
+
+def read_batch(path: str) -> tuple[dict, pa.RecordBatch]:
+    """O5 — schema from the container header + all records as Arrow columns."""
+    with open(path, "rb") as fh:
+        data = fh.read()
+    buf = io.BytesIO(data)
+    try:
+        meta = _read_meta(buf)
+        schema = json.loads(meta["avro.schema"])
+        codec = meta.get("avro.codec", b"null").decode()
+        if codec not in _DECOMPRESS:
+            raise ValueError(f"unsupported avro codec {codec!r}")
+        sync = buf.read(16)
+        payloads, n = [], 0
+        while buf.tell() < len(data):
+            n += read_long(buf)
+            payloads.append(_DECOMPRESS[codec](buf.read(read_long(buf))))
+            if buf.read(16) != sync:
+                raise ValueError("sync marker mismatch")
+    except ValueError as e:
+        raise ValueError(f"{e} in {path}") from None
+    return schema, RecordCodec(schema).decode(b"".join(payloads), n)
+
+
+def read_container(path: str) -> tuple[dict, list[dict]]:
+    """O5 — schema from the container header + all records decoded, as
+    dicts (a primitive container's values under the ``value`` key)."""
+    schema, batch = read_batch(path)
+    names = batch.schema.names
+    cols = [_pylist(c) for c in batch.columns]
+    return schema, [dict(zip(names, vals)) for vals in zip(*cols)]

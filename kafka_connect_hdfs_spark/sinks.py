@@ -22,6 +22,7 @@ bundles spark-avro in our image — gated with a runtime check anyway).
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -112,18 +113,35 @@ def _committed_sort_key(path: str):
     return (0, 0, os.path.getmtime(path), path)
 
 
+def _partition_runs(batch, cols):
+    """(start, end, key) of each run of rows with equal ``cols`` values in an
+    Arrow batch (one run for the whole batch when ``cols`` is empty)."""
+    from kafka_connect_hdfs_spark.formats.avro_io import _pylist
+
+    if cols:
+        keys = zip(*(_pylist(batch.column(c)) for c in cols))
+    else:
+        keys = itertools.repeat((), batch.num_rows)
+    a = 0
+    for k, run in itertools.groupby(keys):
+        b = a + sum(1 for _ in run)
+        yield a, b, k
+        a = b
+
+
 class PurePythonAvroSink(FormatSink):
     """O1/O5 without spark-avro: lands genuine Avro Object Container Files
     via the dependency-free codec in formats/avro_io.py (container spec:
     avro/AvroRecordWriterProvider.java:50-103; schema read-back:
     avro/AvroFileReader.java:42-53).
 
-    Files are written per Spark partition on the executors
-    (mapPartitionsWithIndex) — no driver collect. Hive-style partition dirs
-    are grouped within each task, mirroring the reference's one-writer-per
-    -encodedPartition layout (TopicPartitionWriter.getWriter). Every write
-    call stamps a fresh run id into its filenames, so appending a second
-    batch never overwrites committed files. Reads decode executor-side.
+    Files are written per Spark partition on the executors, from Arrow
+    batches in one ``mapInArrow`` pass — no driver collect. Hive-style
+    partition dirs are grouped within each task, mirroring the reference's
+    one-writer-per-encodedPartition layout (TopicPartitionWriter.getWriter).
+    Every write call stamps a fresh run id into its filenames, so appending
+    a second batch never overwrites committed files. Reads decode
+    executor-side into Arrow batches, also through ``mapInArrow``.
 
     When the JVM ``avro`` datasource is present (real cluster), write/read
     delegate to it instead — same layout, codegen speed.
@@ -134,9 +152,7 @@ class PurePythonAvroSink(FormatSink):
         import os
         import uuid
 
-        from kafka_connect_hdfs_spark.formats.avro_io import (
-            struct_to_avro_schema, write_container,
-        )
+        from kafka_connect_hdfs_spark.formats.avro_io import struct_to_avro_schema
 
         if mode not in ("append", "overwrite"):
             raise ValueError(f"avro sink supports append/overwrite, got {mode!r}")
@@ -197,7 +213,6 @@ class PurePythonAvroSink(FormatSink):
                 type(df.schema)(payload_fields), name="spark_record"
             )
         pcols = list(partition_by)
-        names = [f.name for f in payload_fields]
         run_id = uuid.uuid4().hex[:8]  # unique per write call — appends never collide
 
         if pcols:
@@ -205,51 +220,53 @@ class PurePythonAvroSink(FormatSink):
                 *[F.col(c) for c in pcols]
             )
 
-        def to_datum(r):
-            return r["value"] if unwrap else {c: r[c] for c in names}
+        def write_part(batches):
+            import pyarrow as pa
+            from pyspark import TaskContext
 
-        def write_part(idx, rows):
-            import itertools
+            from kafka_connect_hdfs_spark.formats.avro_io import ContainerWriter, RecordCodec
 
-            n = 0
-            if pcols:
-                for key, group in itertools.groupby(
-                    rows, key=lambda r: tuple(r[c] for c in pcols)
-                ):
-                    d = os.path.join(
-                        local, *[f"{c}={v}" for c, v in zip(pcols, key)]
+            rc = RecordCodec(avro_schema)
+            name = f"part-{TaskContext.get().partitionId():05d}-{run_id}.avro"
+            writer, key, n = None, None, 0
+            try:
+                for batch in batches:
+                    data, offsets = rc.encode(
+                        [batch.column(c) for c in rc.names], batch.num_rows
                     )
-                    os.makedirs(d, exist_ok=True)
-                    n += write_container(
-                        os.path.join(d, f"part-{idx:05d}-{run_id}.avro"),
-                        avro_schema,
-                        (to_datum(r) for r in group),
-                        codec=codec,
-                    )
-            else:
-                os.makedirs(local, exist_ok=True)
-                n += write_container(
-                    os.path.join(local, f"part-{idx:05d}-{run_id}.avro"),
-                    avro_schema,
-                    (to_datum(r) for r in rows),
-                    codec=codec,
-                )
-            yield n
+                    for a, b, k in _partition_runs(batch, pcols):
+                        if writer is None or k != key:
+                            if writer is not None:
+                                writer.close()
+                            d = os.path.join(local, *[f"{c}={v}" for c, v in zip(pcols, k)])
+                            os.makedirs(d, exist_ok=True)
+                            writer = ContainerWriter(os.path.join(d, name), avro_schema, codec)
+                            key = k
+                        writer.append(data, offsets[a:b + 1])
+                        n += b - a
+                if writer is None and not pcols:
+                    # an empty partition still lands its (header-only) file
+                    writer = ContainerWriter(os.path.join(local, name), avro_schema, codec)
+            finally:
+                if writer is not None:
+                    writer.close()
+            yield pa.RecordBatch.from_pydict({"n": [n]})
 
         os.makedirs(local, exist_ok=True)
-        df.rdd.mapPartitionsWithIndex(write_part).sum()
+        df.mapInArrow(write_part, "n long").collect()
 
     def read(self, spark: SparkSession, path: str) -> DataFrame:
         """Distributed decode: the driver only globs file names and reads ONE
         container header for the schema; record decode runs executor-side
-        (parallelized file list → per-file decode), so a 100 TB landing zone
-        never funnels through the driver."""
+        (one ``mapInArrow`` task per slice of the file list, each file
+        decoded to Arrow columns), so a 100 TB landing zone never funnels
+        through the driver."""
         import glob as _glob
         import os
 
-        from kafka_connect_hdfs_spark.formats.avro_io import (
-            avro_to_struct, read_container, read_schema,
-        )
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from kafka_connect_hdfs_spark.formats.avro_io import avro_to_struct, read_schema
 
         if jvm_avro_available(spark):
             return FormatSink.read(self, spark, path)
@@ -276,19 +293,33 @@ class PurePythonAvroSink(FormatSink):
         out_struct = struct
         for c in sorted(part_keys - set(struct.fieldNames())):
             out_struct = out_struct.add(T.StructField(c, T.StringType(), True))
-        field_names = out_struct.fieldNames()
+        out_schema = to_arrow_schema(out_struct)
 
-        def decode(it):
-            for fp, pvals in it:
-                _, recs = read_container(fp)
-                for r in recs:
-                    merged = {**r, **pvals}
-                    yield tuple(merged.get(f) for f in field_names)
+        def decode(batches):
+            import pyarrow as pa
 
-        rdd = spark.sparkContext.parallelize(
-            tasks, max(1, min(len(tasks), spark.sparkContext.defaultParallelism))
-        ).mapPartitions(decode)
-        return spark.createDataFrame(rdd, out_struct)
+            from kafka_connect_hdfs_spark.formats.avro_io import read_batch
+
+            for ids in batches:
+                for i in ids.column(0).to_pylist():
+                    fp, pvals = tasks[i]
+                    rb = read_batch(fp)[1]
+                    n = rb.num_rows
+                    if not n:
+                        continue
+                    cols = []
+                    for f in out_schema:
+                        if f.name in pvals:  # the dir value wins, as in hive layouts
+                            col = pa.repeat(pa.scalar(pvals[f.name], pa.string()), n)
+                        elif f.name in rb.schema.names:
+                            col = rb.column(f.name)
+                        else:  # a field this file's schema lacks
+                            col = pa.nulls(n, f.type)
+                        cols.append(col if col.type == f.type else col.cast(f.type))
+                    yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
+
+        k = max(1, min(len(tasks), spark.sparkContext.defaultParallelism))
+        return spark.range(0, len(tasks), 1, k).mapInArrow(decode, out_struct)
 
     def schema_of(self, spark: SparkSession, path: str):
         """Reference semantics: schema of the file with the MAX COMMITTED

@@ -106,3 +106,36 @@ def test_contract_names_replay_idempotent(spark, records, tmp_path):
     second = sorted(glob.glob(f"{tmp_path}/topics/events/partition=*/*.parquet"))
     assert first == second
     assert read_committed(spark, cfg, "events").count() == n_first
+
+
+def test_hourly_contract_names_keep_kafka_partitions_apart(spark, tmp_path):
+    """Under a time partitioner every Kafka partition's chunk N of one hour
+    shares the hour directory; each committed file must still hold exactly
+    its own chunk: the names equal the manifest and every record falls in
+    its name's partition and offset range."""
+    from kafka_connect_hdfs_spark.formats.avro_io import read_container
+
+    # 8 Kafka partitions x 60 offsets spread over 3 hours
+    records = spark.range(480).select(
+        F.lit("events").alias("topic"),
+        (F.col("id") % 8).cast("int").alias("partition"),
+        (F.col("id") / 8).cast("long").alias("offset"),
+        F.timestamp_seconds(F.lit(1_704_067_200) + (F.col("id") / 8).cast("long") * 180)
+        .alias("ts"),
+        F.col("id").alias("payload"),
+    )
+    cfg = HdfsSinkConfig(
+        url=f"file://{tmp_path}", format="avro", flush_size=7,
+        partitioner="hourly", timezone="UTC",
+    )
+    res = land_with_contract_names(spark, records, cfg, topic="events", ts_col="ts")
+    manifest = {r["file_name"]: r for r in res.manifest.collect()}
+    files = glob.glob(f"{tmp_path}/topics/events/**/*.avro", recursive=True)
+    assert {os.path.basename(f) for f in files} == set(manifest)
+    assert len(files) == len(manifest)
+    for f in files:
+        row = manifest[os.path.basename(f)]
+        recs = read_container(f)[1]
+        assert len(recs) == row["record_count"]
+        assert {r["partition"] for r in recs} == {row["partition"]}
+        assert all(row["start_offset"] <= r["offset"] <= row["end_offset"] for r in recs)

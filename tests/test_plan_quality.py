@@ -1375,3 +1375,40 @@ def test_changelog_append_range_insert_is_plain_scan(spark, tmp_path_factory):
     assert "Exchange" not in plan, plan
     files = feed.inputFiles()
     assert files and all("/data/v3/" in f for f in files), files
+
+
+def _jobs_in_group(spark, group, fn):
+    """Spark jobs ``fn()`` runs, counted by statusTracker on a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_avro_sink_job_budget(spark, tmp_path):
+    """The pure-Python Avro sink is one Arrow pass each way: a partitioned
+    write is the partitioning shuffle plus the encode stage (2 jobs), an
+    unpartitioned one a single job; building the read runs none and its
+    count() two (decode stage + count). These counts may only go down.
+    Neither direction goes through an RDD of Rows."""
+    import inspect
+
+    from pyspark.sql import functions as F
+
+    from kafka_connect_hdfs_spark import sinks
+
+    src = inspect.getsource(sinks)
+    assert ".rdd" not in src and "parallelize(" not in src
+
+    sink = sinks.PurePythonAvroSink("avro", ".avro", {})
+    df = spark.range(1000).select("id", (F.col("id") % 7).alias("g"))
+    out = str(tmp_path)
+    assert _jobs_in_group(spark, "avro-write-part", lambda: sink.write(df, f"{out}/p", ["g"])) == 2
+    assert _jobs_in_group(spark, "avro-write-flat", lambda: sink.write(df, f"{out}/f", [])) == 1
+    assert _jobs_in_group(spark, "avro-read-build", lambda: sink.read(spark, f"{out}/p")) == 0
+    back = sink.read(spark, f"{out}/p")
+    assert _jobs_in_group(spark, "avro-read-count", back.count) == 2
